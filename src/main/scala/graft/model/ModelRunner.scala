@@ -542,39 +542,36 @@ object ModelRunner {
     // 1.7 s of serialized between-job driver gaps). The gate contract
     // is unchanged — a model materializes only after every upstream
     // model's tests passed, so a failing test still halts everything
-    // downstream; independent siblings in flight when a test fails
-    // complete (exactly dbt's behavior), and the first topo-order
-    // failure is rethrown after the pool quiesces. threads=1 keeps
-    // the strict serial order.
+    // downstream; models independent of the failure still
+    // materialize (exactly dbt's behavior), and the first topo-order
+    // failure is rethrown after the pool quiesces. threads=1 runs one
+    // model at a time under the same rules.
     val threads = math.max(1, spark.conf
       .get("spark.graft.model.threads", "4").toInt)
-    if (threads == 1 || order.size <= 1) order.map(execOne)
-    else {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(threads, order.size))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(pool)
-      try {
-        val futures = mutable.Map.empty[String, Future[ModelRun]]
-        // order is topological, so every dep's future exists already;
-        // deps outside `order` (unselected) were not run before this
-        // change either — filter keeps --select semantics identical
-        order.foreach { name =>
-          val depFs = rendered(name)._2.toSeq.sorted.flatMap(futures.get)
-          futures(name) =
-            Future.sequence(depFs).map(_ => execOne(name))
-        }
-        // quiesce BEFORE surfacing a failure: no zombie materialization
-        // may continue past run()'s return/throw
-        val settled = order.map(n =>
-          scala.util.Try(Await.result(futures(n), Duration.Inf)))
-        settled.collectFirst { case scala.util.Failure(e) =>
-          throw e
-        }
-        settled.map(_.get)
-      } finally pool.shutdown()
-    }
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(threads, order.size.max(1)))
+    implicit val ec: ExecutionContext =
+      ExecutionContext.fromExecutor(pool)
+    try {
+      val futures = mutable.Map.empty[String, Future[ModelRun]]
+      // order is topological, so every dep's future exists already;
+      // deps outside `order` (unselected) are not run, so the filter
+      // keeps --select semantics
+      order.foreach { name =>
+        val depFs = rendered(name)._2.toSeq.sorted.flatMap(futures.get)
+        futures(name) =
+          Future.sequence(depFs).map(_ => execOne(name))
+      }
+      // quiesce BEFORE surfacing a failure: no zombie materialization
+      // may continue past run()'s return/throw
+      val settled = order.map(n =>
+        scala.util.Try(Await.result(futures(n), Duration.Inf)))
+      settled.collectFirst { case scala.util.Failure(e) =>
+        throw e
+      }
+      settled.map(_.get)
+    } finally pool.shutdown()
   }
 }

@@ -61,33 +61,30 @@ final class Pipeline(val name: String, stages: Seq[Stage],
   private val byName = stages.map(s => s.name -> s).toMap
   stages.foreach(s => s.deps.foreach(d => require(byName.contains(d),
     s"stage ${s.name} depends on unknown stage $d")))
+  Pipeline.findCycle(stages.map(s => s.name -> s.deps).toMap).foreach { c =>
+    throw new IllegalArgumentException(
+      s"pipeline $name has a dependency cycle: ${c.mkString(" -> ")}")
+  }
 
-  /** Run one window. Independent ready stages execute concurrently. */
+  /** Run one window. Independent ready stages execute concurrently; a
+    * stage downstream of a failure is skipped. The graph is acyclic,
+    * so every round either skips or runs at least one stage. */
   def run(window: RunWindow): PipelineResult = {
     val done = scala.collection.mutable.Map.empty[String, StageReport]
     var remaining = stages
     while (remaining.nonEmpty) {
-      val ready = remaining.filter(_.deps.forall(d =>
-        done.get(d).exists(_.outcome == Success(StageOk))))
-      val blocked = remaining.filter(_.deps.exists(d =>
-        done.get(d).exists(r => r.outcome != Success(StageOk))))
-      if (ready.isEmpty) {
-        // everything left is blocked by a failure upstream — mark skipped
-        (remaining.toSet -- blocked.toSet).foreach { s =>
-          done(s.name) = StageReport(s.name, 0,
-            Failure(new IllegalStateException("skipped: upstream not satisfied")))
-        }
-        blocked.foreach { s =>
-          done(s.name) = StageReport(s.name, 0,
-            Failure(new IllegalStateException("skipped: upstream failed")))
-        }
-        remaining = Nil
-      } else {
-        val futures = ready.map(s => Future(runWithRetries(s, window)))
-        Await.result(Future.sequence(futures), Duration.Inf)
-          .foreach(r => done(r.stage) = r)
-        remaining = remaining.filterNot(s => done.contains(s.name))
+      val (blocked, rest) = remaining.partition(_.deps.exists(d =>
+        done.get(d).exists(_.outcome != Success(StageOk))))
+      blocked.foreach { s =>
+        done(s.name) = StageReport(s.name, 0,
+          Failure(new IllegalStateException("skipped: upstream failed")))
       }
+      val ready = rest.filter(_.deps.forall(d =>
+        done.get(d).exists(_.outcome == Success(StageOk))))
+      val futures = ready.map(s => Future(runWithRetries(s, window)))
+      Await.result(Future.sequence(futures), Duration.Inf)
+        .foreach(r => done(r.stage) = r)
+      remaining = rest.filterNot(s => done.contains(s.name))
     }
     PipelineResult(window, stages.map(s => done(s.name)))
   }
@@ -129,6 +126,27 @@ final class Pipeline(val name: String, stages: Seq[Stage],
       }
     }
     StageReport(s.name, attempt, last)
+  }
+}
+
+object Pipeline {
+  /** One dependency cycle as a path that starts and ends on the same
+    * stage (`a -> b -> a`; a self-dependency is `a -> a`), or None when
+    * the graph is acyclic. Depth-first over `deps`, in name order. */
+  private def findCycle(deps: Map[String, Seq[String]]): Option[Seq[String]] = {
+    val finished = scala.collection.mutable.Set.empty[String]
+    // `path` holds the stages on the current walk, innermost first
+    def visit(n: String, path: List[String]): Option[Seq[String]] =
+      if (path.contains(n)) Some(n +: path.takeWhile(_ != n).reverse :+ n)
+      else if (finished(n)) None
+      else {
+        val found = deps(n).iterator.map(visit(_, n :: path))
+          .collectFirst { case Some(c) => c }
+        finished += n
+        found
+      }
+    deps.keys.toSeq.sorted.iterator.map(visit(_, Nil))
+      .collectFirst { case Some(c) => c }
   }
 }
 

@@ -166,12 +166,6 @@ final case class JsonDirSource(basePath: String,
   }
 }
 
-/** Parquet table source (the engine's catalog/external-table scan — the
-  * Spectrum-external-scan analog, serving/redshift.tf:9-21). */
-final case class ParquetSource(path: String) extends Source {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
-}
-
 /** ORC table source — the other columnar lake format Spark reads
   * natively (predicate pushdown + column pruning work the same as
   * parquet). Beyond-reference: interop with ORC-based warehouses. */

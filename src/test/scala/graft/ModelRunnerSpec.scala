@@ -120,6 +120,39 @@ class ModelRunnerSpec extends AnyFunSuite {
     assert(!spark.catalog.tableExists("mr_out.downstream_never"))
   }
 
+  test("threads=1 still materializes an independent sibling of a " +
+      "model whose schema test fails, then rethrows that failure") {
+    spark.sql("CREATE DATABASE IF NOT EXISTS mr_src")
+    Seq((1, 10.0), (1, 20.0)).toDF("id", "amount") // duplicate key
+      .write.mode("overwrite").saveAsTable("mr_src.dup_rows")
+    spark.sql("DROP TABLE IF EXISTS mr_out.z_sibling")
+    val root = writeProject(Seq(
+      "dbt_project.yml" -> baseProjectYml,
+      "models/core/a_gated.sql" ->
+        "SELECT id, amount FROM {{ var(\"source_schema\") }}.dup_rows\n",
+      "models/core/schema.yml" ->
+        """version: 2
+          |models:
+          |  - name: a_gated
+          |    columns:
+          |      - name: id
+          |        data_tests:
+          |          - unique
+          |""".stripMargin,
+      // independent of a_gated and after it in topological order
+      "models/core/z_sibling.sql" ->
+        "SELECT COUNT(*) AS n FROM {{ var(\"source_schema\") }}.dup_rows\n"))
+    spark.conf.set("spark.graft.model.threads", "1")
+    try {
+      val ex = intercept[ModelTestFailedException] {
+        ModelRunner.run(spark, ModelRunner.loadProject(root))
+      }
+      assert(ex.model == "a_gated")
+      assert(spark.catalog.tableExists("mr_out.z_sibling"))
+      assert(spark.table("mr_out.z_sibling").as[Long].head() == 2L)
+    } finally spark.conf.unset("spark.graft.model.threads")
+  }
+
   test("dependency cycles fail loudly") {
     val root = writeProject(Seq(
       "dbt_project.yml" -> baseProjectYml,

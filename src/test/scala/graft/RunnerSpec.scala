@@ -55,6 +55,34 @@ class RunnerSpec extends AnyFunSuite {
     assert(ran.contains("side"), "unrelated sibling must still run")
   }
 
+  test("a cyclic stage graph is rejected at construction, naming the " +
+      "cycle") {
+    def stage(n: String, deps: String*) = Stage(n, deps)(_ => StageOk)
+    val cyc = intercept[IllegalArgumentException] {
+      new Pipeline("cyc", Seq(stage("start"), stage("a", "start", "c"),
+        stage("b", "a"), stage("c", "b"), stage("after", "c")))
+    }
+    assert(cyc.getMessage.contains("dependency cycle: a -> c -> b -> a"))
+    val self = intercept[IllegalArgumentException] {
+      new Pipeline("self", Seq(stage("s", "s")))
+    }
+    assert(self.getMessage.contains("dependency cycle: s -> s"))
+  }
+
+  test("every stage below a failure, however deep, is skipped as " +
+      "upstream failed") {
+    val p = new Pipeline("deep", Seq(
+      Stage("dq")(_ => GateFailed("bad")),
+      Stage("mid", Seq("dq"))(_ => StageOk),
+      Stage("leaf", Seq("mid"))(_ => StageOk)))
+    val res = p.run(w)
+    for (n <- Seq("mid", "leaf")) {
+      val r = res.report(n).get
+      assert(r.attempts == 0)
+      assert(r.outcome.failed.get.getMessage == "skipped: upstream failed")
+    }
+  }
+
   test("retries: a flaky stage succeeds on attempt 2") {
     val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
     val p = new Pipeline("flaky", Seq(
